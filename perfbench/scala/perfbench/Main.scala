@@ -14,26 +14,31 @@ import graft.GraftSession
 /** Benchmark harness: one workload in one JVM, one client thread issuing
   * calls into the program in a closed loop.
   *
-  *   perfbench.Main <workload> <inputs> <scratch> <trace 0|1> <out.json>
+  *   perfbench.Main <workload> <inputs> <scratch> <trace 0|1> <seconds> <seed> <out.json>
   *
-  * After set-up the run makes exactly one timed pass over the workload's
-  * ops: a pass runs cold code paths, so a second pass in the same JVM would
-  * measure something else. With trace=1 the pass runs with listeners
-  * attached and every call tagged with a job group, and the run reports
-  * per-layer metrics. Results go to `out.json`; `run.py` checks outputs
-  * against the oracle and prints the result line.
+  * After set-up the run makes one untimed warm-up pass over the workload's
+  * ops (pass 0: class loading, code generation and JIT), then timed passes
+  * until `seconds` have gone by, at least [[Main.MinPasses]] of them; the
+  * timings are medians over the timed passes. With trace=1 the warm-up is
+  * followed by one pass with listeners attached and every call tagged with
+  * a job group, and the run reports per-layer metrics of that pass.
+  * Results go to `out.json`; `run.py` checks outputs against the oracle and
+  * prints the result line.
   */
 object Main {
 
   final case class Conf(workload: String, inputs: String, scratch: String, trace: Boolean,
-                        cores: Int)
+                        seconds: Double, seed: Long, cores: Int)
 
   /** Set-ups per run; `setup_s` is their median. */
   val Setups = 3
+  /** Timed passes an untraced run makes however long they take. */
+  val MinPasses = 1
 
   def main(args: Array[String]): Unit = {
-    val Array(workload, inputs, scratch, trace, out) = args
-    val conf = Conf(workload, inputs, scratch, trace == "1", Runtime.getRuntime.availableProcessors)
+    val Array(workload, inputs, scratch, trace, seconds, seed, out) = args
+    val conf = Conf(workload, inputs, scratch, trace == "1", seconds.toDouble, seed.toLong,
+      Runtime.getRuntime.availableProcessors)
     val wl: Workload = workload match {
       case "elt_daily"     => new EltDaily(conf)
       case "query_mix"     => new QueryMix(conf)
@@ -48,14 +53,16 @@ object Main {
 trait Workload {
   /** Touch tables and build standing state; runs inside every set-up. */
   def warm(spark: SparkSession, run: Runner): Unit
-  /** The timed pass (pass 0); every program call goes through `run.op`. */
-  def pass(spark: SparkSession, run: Runner): Unit
-  /** Untimed output checks after the pass; returns failure messages. */
+  /** Pass `p` over every op (0 is the warm-up); every program call goes
+    * through `run.op`. Each pass starts from the same state.
+    */
+  def pass(spark: SparkSession, run: Runner, p: Int): Unit
+  /** Untimed output checks after the last pass; returns failure messages. */
   def check(spark: SparkSession, run: Runner): Seq[String] = Nil
-  /** Workload-specific metrics of the pass, traced or not. */
-  def passMetrics(run: Runner): Seq[Metric] = Nil
-  /** Per-layer metrics of the traced pass. */
-  def layers(run: Runner, trace: Trace): Seq[Metric] = Nil
+  /** Workload-specific metrics of the timed passes, traced or not. */
+  def passMetrics(run: Runner, passes: Seq[Int]): Seq[Metric] = Nil
+  /** Per-layer metrics of the traced pass `p`. */
+  def layers(run: Runner, trace: Trace, p: Int): Seq[Metric] = Nil
   /** Ops whose results `run.py` compares with the DuckDB oracle:
     * (op name, result dir, oracle SQL).
     */
@@ -163,7 +170,10 @@ object Harness {
       System.err.println(s"[perfbench] setup $i: session ${setups.last._1} s, warm ${setups.last._2} s")
     }
 
-    // with --trace 1 the pass runs traced; standing state is rebuilt under
+    val tw = System.nanoTime
+    wl.pass(spark, runner, 0)
+    System.err.println(f"[perfbench] warm-up pass ${(System.nanoTime - tw) / 1e9}%.3f s")
+    // with --trace 1 one pass runs traced; standing state is rebuilt under
     // the trace first so its builds are attributed too
     val trace = if (!conf.trace) None else {
       val tr = new Trace(spark)
@@ -172,38 +182,52 @@ object Harness {
       Some(tr)
     }
     val gc0 = gcSeconds
-    val t0ms = System.currentTimeMillis
-    val t = System.nanoTime
-    wl.pass(spark, runner)
-    val pass = (System.nanoTime - t) / 1e9
-    val t1ms = System.currentTimeMillis
+    val passWalls = ArrayBuffer[Double]()
+    val windows = ArrayBuffer[(Long, Long)]() // pass start and end, epoch ms
+    val timedStart = System.nanoTime
+    def more = if (conf.trace) passWalls.isEmpty
+      else passWalls.size < Main.MinPasses || (System.nanoTime - timedStart) / 1e9 < conf.seconds
+    while (more) {
+      val t0ms = System.currentTimeMillis
+      val t = System.nanoTime
+      wl.pass(spark, runner, passWalls.size + 1)
+      passWalls += (System.nanoTime - t) / 1e9
+      System.err.println(f"[perfbench] timed pass ${passWalls.size} ${passWalls.last}%.3f s")
+      windows += ((t0ms, System.currentTimeMillis))
+    }
+    val passes = 1 to passWalls.size
+    val pass = median(passWalls.toSeq)
     val gcS = gcSeconds - gc0
     val heapMb = retainedHeapMb
+    val tc = System.nanoTime
     val failures = checked(wl.check(spark, runner))
+    System.err.println(f"[perfbench] checks ${(System.nanoTime - tc) / 1e9}%.3f s")
 
     val e2e = ArrayBuffer[Metric]()
     val layers = ArrayBuffer[Metric]()
     val setupTotals = setups.map { case (a, b) => a + b }
-    val opTimes = runner.spans.filter(s => s.phase == "op" && s.pass >= 0).map(_.seconds).toSeq
+    val opTimes = runner.spans.filter(s => s.phase == "op" && s.pass >= 1).map(_.seconds).toSeq
     e2e += Metric("setup_s", median(setupTotals.toSeq), "s")
     e2e += Metric("pass_s", pass, "s")
     e2e += Metric("op_p50_s", median(opTimes), "s")
     e2e += Metric("heap_retained_mb", heapMb, "MB")
     layers += Metric("op_p90_s", pct(opTimes, 0.9), "s")
     layers += Metric("op_count", opTimes.size, "count")
+    layers += Metric("pass_count", passWalls.size, "count")
     layers += Metric("session.cold_s", setupTotals.head, "s")
     layers += Metric("session.start_s", median(setups.map(_._1).toSeq), "s")
     layers += Metric("session.warm_s", median(setups.map(_._2).toSeq), "s")
     layers += Metric("jvm.gc_s", gcS, "s")
-    layers ++= wl.passMetrics(runner)
+    layers ++= wl.passMetrics(runner, passes)
 
     trace.foreach { tr =>
       tr.detach()
+      val (t0ms, t1ms) = windows.head
       val jobs = tr.jobsOf(_.startsWith(s"${conf.workload}/"))
         .filter(j => j.startMs >= t0ms && j.endMs <= t1ms)
       val taskS = jobs.map(_.taskNs).sum / 1e9
       // driver time: top-level call wall not covered by any job span
-      val top = runner.spans.filter(s => s.pass == 0 && (s.phase == "op" || s.phase == "build"))
+      val top = runner.spans.filter(s => s.pass == 1 && (s.phase == "op" || s.phase == "build"))
       val covered = top.map(s => Trace.covered(jobs.filter(j => j.startMs >= s.startMs && j.endMs <= s.endMs)
         .map(j => (j.startMs, j.endMs)))).sum / 1000.0
       layers += Metric("spark.jobs", jobs.size, "count")
@@ -214,7 +238,7 @@ object Harness {
       layers += Metric("spark.driver_s", top.map(_.seconds).sum - covered, "s")
       layers += Metric("trace.pass_s", pass, "s")
       layers += Metric("trace.overhead", pass / (pass - runner.bookkeepingS), "ratio")
-      layers ++= wl.layers(runner, tr)
+      layers ++= wl.layers(runner, tr, 1)
     }
     val ops = runner.spans.filter(_.phase == "op")
     // an op fails once however many of its phases threw
@@ -246,6 +270,15 @@ object Harness {
       val s = Files.walk(p)
       try s.iterator().asScala.filter(Files.isRegularFile(_)).map(_.toString)
         .filterNot(_.contains("/spark-local/")).toSet
+      finally s.close()
+    }
+  }
+
+  def delete(root: String): Unit = {
+    val p = Paths.get(root)
+    if (Files.exists(p)) {
+      val s = Files.walk(p)
+      try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
       finally s.close()
     }
   }
